@@ -8,12 +8,13 @@ SURVEY.md §2 with DuckDB oracles (see ``mhealth_spark/queries.py``).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mhealth_spark.queries import ORACLES, QUERIES  # noqa: E402
 

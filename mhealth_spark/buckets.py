@@ -58,9 +58,8 @@ def per_entity_anchored_bucket(
     earlier bins by floor division (pandas generates bins backward from
     the origin). bucket = origin + floor((ts − origin)/1d) days.
 
-    Implemented as a window ``min`` over the entity partition — reuses
-    the engine's (entity, ts) layout, no extra shuffle after
-    ``layout_events``.
+    Implemented as a window ``min`` over the entity partition — it shares
+    the entity exchange of the other per-entity windows in the plan.
     """
     from pyspark.sql import Window
 

@@ -55,11 +55,6 @@ def main(argv: list[str] | None = None) -> int:
         help="leakage-clean training rows: multi-horizon features + labels",
     )
     add_io(p_ts)
-    p_ts.add_argument(
-        "--grid", action="store_true",
-        help="hierarchical one-scan rollup for the dense hourly grid "
-             "(default: generic as-of composition)",
-    )
     p_ts.add_argument("--horizon-hours", type=int, default=24)
 
     p_rf = sub.add_parser("tokens-row-features", help="lag/lead/rolling features")
@@ -197,18 +192,11 @@ def main(argv: list[str] | None = None) -> int:
             lookback_hours=args.lookback_hours,
         )
     elif args.cmd == "tokens-training-set":
-        from mhealth_spark.tokens_engine import training_set, training_set_grid
+        from mhealth_spark.tokens_engine import training_set
 
-        if args.grid:
-            out = training_set_grid(
-                df, entity_col=args.entity_col,
-                horizon_hours=args.horizon_hours,
-            )
-        else:
-            out = training_set(
-                df, entity_col=args.entity_col,
-                horizon_hours=float(args.horizon_hours),
-            )
+        out = training_set(
+            df, entity_col=args.entity_col, horizon_hours=args.horizon_hours
+        )
     elif args.cmd == "tokens-row-features":
         from mhealth_spark.tokens_engine import row_features
 

@@ -11,10 +11,11 @@ sandbox has no Iceberg jar, so every read/write goes through this seam:
   skipping at 100 TB), ``write.parquet`` fallback.
 
 Physical layout contract (the engine's core scale discipline, SURVEY §4):
-``layout_events`` range-partitions by entity and sorts each partition by
-timestamp. Every downstream as-of join / sessionization / window op then
-runs without a further shuffle — one exchange amortized across the whole
-feature pipeline.
+a per-entity op pays ONE hash exchange on the entity — the window's own
+``hashpartitioning(entity)`` plus a sort by (entity, ts) — and every later
+window / groupBy on the same entity in that plan reuses it.
+``write_bucketed_layout`` persists that partitioning, so ops over its
+tables run with no exchange at all.
 """
 
 from __future__ import annotations
@@ -93,9 +94,8 @@ def write_bucketed_layout(
     """Materialize the PERSISTED entity layout: a bucketed table clustered
     by entity, sorted by (entity, ts, tiebreak).
 
-    This is the durable version of ``layout_events``: instead of paying
-    one exchange per job, the exchange is paid ONCE at write time and
-    every later window / as-of / sessionize op over the table runs with
+    This is the durable version of the per-job entity exchange: it is
+    paid ONCE at write time and every later window / as-of / sessionize op over the table runs with
     **no Exchange at all** — the scan's ``HashPartitioning(entity)``
     already satisfies the window's required distribution, so Spark elides
     the shuffle (asserted by ``tests/test_layout.py`` on the physical
@@ -160,22 +160,3 @@ def sorted_bucket_scan(spark: SparkSession, enabled: bool = True) -> None:
         "true" if enabled else "false",
     )
 
-
-def layout_events(
-    df: DataFrame,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Apply the engine's physical layout: range-partition by entity,
-    sort each partition by (entity, ts).
-
-    This replaces the reference's per-call ``sort_values("local_start")``
-    (``simple_features.py:257,663,740``) with ONE exchange whose ordering
-    every later window/as-of/sessionize op reuses. A global sort is never
-    needed — ordering only matters within an entity.
-    """
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return df.repartitionByRange(int(parts), F.col(entity_col)).sortWithinPartitions(
-        entity_col, ts_col
-    )

@@ -16,6 +16,7 @@ Both are pure functions of (n, seed): re-running yields identical bytes.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import numpy as np
 import pandas as pd
@@ -88,7 +89,12 @@ def synth_tokens(
     )
 
 
-TOKENS_CACHE_DIR = "/root/repo/.synth_cache"
+# materialized synthetic tables live beside the package unless
+# SPARK_GRAFT_SYNTH_CACHE points elsewhere
+_REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOKENS_CACHE_DIR = os.environ.get(
+    "SPARK_GRAFT_SYNTH_CACHE", os.path.join(_REPO_DIR, ".synth_cache")
+)
 
 
 def materialize_synth_tokens(
@@ -107,8 +113,6 @@ def materialize_synth_tokens(
     ``vocab`` != default gets its own cache file — the BPE queries use a
     256-token vocabulary so adjacent pairs actually repeat (mean pair
     count ~23 at n_docs=3000 vs ~1 at vocab=50k)."""
-    import os
-
     suffix = "" if vocab == 50_000 else f"_v{vocab}"
     path = os.path.join(cache_dir, f"tokens_n{n_docs}_seed{seed}{suffix}.parquet")
     if not os.path.isdir(path):

@@ -2,8 +2,11 @@
 the pre-tokenized sequence table ``(doc_id, tokens array<int32>, n_tok,
 source)`` (BASELINE.json input_hint), at 10^12-sequence posture.
 
-Physical contract: range-partition by entity, sortWithinPartitions by
-(entity, ts) — every window op below reuses that ONE exchange. Heavy
+Physical contract: each per-entity op rides ONE hash exchange on the
+entity — the window's own ``hashpartitioning(entity)`` plus a sort by
+(entity, ts) — and every later window / groupBy on the same entity reuses
+it; tables written by ``source.write_bucketed_layout`` already carry that
+partitioning, so the same plans run with no exchange at all. Heavy
 entities (the synthetic ``web`` source holds ~50% of rows) are handled
 with salted two-phase aggregation; joins split under AQE.
 
@@ -25,7 +28,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 from mhealth_spark.asof import horizon_label_join, point_in_time_join
 from mhealth_spark.intervals import sessionize
 from mhealth_spark.skew import salted_agg
-from mhealth_spark.source import layout_events
 
 
 def row_features(
@@ -47,8 +49,8 @@ def row_features(
     instead of one skewed shuffle + sort.
 
     ``payload_join=False`` is the one-exchange fallback for inputs already
-    small or already laid out by (entity, ts) (layout_events with hash
-    partitioning), where the window adds no exchange at all.
+    small or already bucketed by entity (``write_bucketed_layout``), where
+    the window adds no exchange at all.
     """
     if not payload_join:
         w = Window.partitionBy(entity_col).orderBy(ts_col, "doc_id")
@@ -263,24 +265,18 @@ def sessionized(
     entity_col: str = "writer_id",
     ts_col: str = "ts",
     gap_minutes: float = 60.0,
-    prelayout: bool = False,
 ) -> DataFrame:
     """Gap-sessionize arrivals per entity and roll up per session.
 
-    ``prelayout=True`` skips the explicit entity exchange for inputs
-    already clustered by entity (``write_bucketed_layout`` tables /
-    ``layout_events`` output): the session window AND the rollup groupBy
-    both ride the existing layout — the whole plan is exchange-free
-    (HashPartitioning(entity) satisfies clustering on (entity,
-    session_id) too; asserted in tests/test_layout.py).
+    One exchange: the session window's ``hashpartitioning(entity)`` and
+    sort feed both the window and the (entity, session_id) rollup, since
+    HashPartitioning(entity) satisfies clustering on (entity, session_id)
+    too. Inputs already bucketed by entity (``write_bucketed_layout``
+    tables) plan with no exchange at all (asserted in
+    tests/test_layout.py).
     """
-    src = (
-        tokens
-        if prelayout
-        else layout_events(tokens, entity_col=entity_col, ts_col=ts_col)
-    )
     s = sessionize(
-        src,
+        tokens,
         entity_col=entity_col,
         start_col=ts_col,
         end_col=None,
@@ -380,10 +376,24 @@ def training_set(
     the big table; everything downstream is grid-sized. The request
     grid is eagerly ``localCheckpoint``-ed: it feeds BOTH joins and
     Catalyst does not reuse the grid subplan across them (measured: 4
-    scans of the event table → 2, the irreducible per-side joins)."""
+    scans of the event table → 2, the irreducible per-side joins).
+
+    With ``requests=None`` and every horizon a whole number of hours,
+    the default hourly grid is served by ``training_set_grid``
+    instead — one rollup scan plus range windows, value-identical to
+    this path (exact-equality pytest + shared DuckDB oracle). Explicit
+    ``requests`` or fractional hours take the generic as-of path."""
     from mhealth_spark.asof import _epoch
 
     if requests is None:
+        if all(float(h).is_integer() for h in (*lookbacks_hours, horizon_hours)):
+            return training_set_grid(
+                tokens,
+                entity_col,
+                ts_col,
+                lookbacks_hours=tuple(int(h) for h in lookbacks_hours),
+                horizon_hours=int(horizon_hours),
+            )
         requests = hourly_requests(tokens, entity_col)
     requests = requests.localCheckpoint()
     lbs = sorted(set(float(h) for h in lookbacks_hours))

@@ -9,7 +9,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mhealth_spark import cli  # noqa: E402
 from mhealth_spark.synth import synth_tokens  # noqa: E402
@@ -165,18 +165,22 @@ def test_cli_corpus_build(spark, tmp_path):
 
 
 def test_cli_tokens_training_set(spark, tokens_parquet, tmp_path):
-    """Both training-set job variants run end-to-end and agree exactly."""
-    out_g = str(tmp_path / "ts_grid")
-    out_j = str(tmp_path / "ts_join")
+    """The training-set job runs end-to-end and agrees exactly with the
+    generic as-of path over the explicit hourly grid."""
+    from mhealth_spark.tokens_engine import hourly_requests, training_set
+
+    out = str(tmp_path / "ts")
     assert cli.main(
-        ["tokens-training-set", "--input", tokens_parquet,
-         "--output", out_g, "--grid"]
+        ["tokens-training-set", "--input", tokens_parquet, "--output", out]
     ) == 0
-    assert cli.main(
-        ["tokens-training-set", "--input", tokens_parquet, "--output", out_j]
-    ) == 0
-    a = _read(spark, out_g).toPandas().sort_values(["source", "ts"]).reset_index(drop=True)
-    b = _read(spark, out_j).toPandas().sort_values(["source", "ts"]).reset_index(drop=True)
+    df = spark.read.parquet(tokens_parquet)
+    a = _read(spark, out).toPandas().sort_values(["source", "ts"]).reset_index(drop=True)
+    b = (
+        training_set(df, hourly_requests(df))
+        .toPandas()
+        .sort_values(["source", "ts"])
+        .reset_index(drop=True)
+    )
     assert len(a) == len(b) > 0
     assert set(a.columns) == set(b.columns)
     for col in a.columns:

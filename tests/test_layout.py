@@ -2,8 +2,8 @@
 ``write_bucketed_layout`` table run with NO Exchange (and, with
 ``sorted_bucket_scan``, no Sort), plus value parity with the plain path.
 
-This is the durable form of the engine's layout contract (SURVEY §4 /
-``source.layout_events``): pay the entity shuffle once at write time,
+This is the durable form of the engine's layout contract (SURVEY §4:
+one entity exchange per plan): pay the entity shuffle once at write time,
 then every window / as-of / sessionize pass over 10^12 rows is
 exchange-free. Reference analogue: the reference re-sorts per call
 (``simple_features.py:257,663,740``); here the sort lives in the table.
@@ -83,15 +83,31 @@ def test_bucketed_sessionize_whole_plan_exchange_free(spark, layout_table):
     # (clustering on (entity, session_id) ⊇ entity) both ride the layout
     from mhealth_spark.tokens_engine import sessionized
 
-    out = sessionized(spark.table(layout_table), prelayout=True)
+    out = sessionized(spark.table(layout_table))
     assert "Exchange" not in _plan(out), _plan(out)
-    # value parity with the generic (layout_events) path
+    # value parity with the plain-input path
     tk = synth_tokens(spark, 20_000, seed=7).select(
         "doc_id", "writer_id", "ts", "n_tok"
     )
     a = sorted(map(tuple, out.collect()))
     b = sorted(map(tuple, sessionized(tk).collect()))
     assert a == b
+
+
+def test_plain_sessionize_single_hash_exchange(spark, tmp_path):
+    # plain parquet input: the session window's hash exchange feeds the
+    # rollup too — exactly one Exchange, and no range partitioning (so
+    # no sampling job)
+    from mhealth_spark.tokens_engine import sessionized
+
+    path = str(tmp_path / "tk.parquet")
+    synth_tokens(spark, 2_000, seed=7).select(
+        "doc_id", "writer_id", "ts", "n_tok"
+    ).write.parquet(path)
+    plan = _plan(sessionized(spark.read.parquet(path)))
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "hashpartitioning(writer_id" in plan, plan
+    assert not re.search("rangepartitioning", plan, re.I), plan
 
 
 def test_trailing_time_features_bucketed_exchange_free(spark, layout_table):

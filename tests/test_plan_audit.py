@@ -22,11 +22,12 @@ pay that build once here — the audit still sees the final probe plan.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 

@@ -3,11 +3,12 @@ same comparison at sf0.01 — this is the fast in-repo replica)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from tools.check_oracles import compare, duck_con  # noqa: E402

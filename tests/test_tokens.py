@@ -6,7 +6,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from mhealth_spark.source import layout_events
 from mhealth_spark.synth import synth_tokens
 
 
@@ -20,11 +19,12 @@ def test_synth_tokens_deterministic(spark):
 
 
 def test_tokens_passthrough_equality(spark):
-    """Run the tokens table through the engine's physical layout +
-    a filter/enrich pipeline; token arrays must be untouched."""
+    """Run the tokens table through an entity exchange + per-partition
+    sort and a filter/enrich pipeline; token arrays must be untouched."""
     df = synth_tokens(spark, 500, seed=7)
     out = (
-        layout_events(df, entity_col="source", ts_col="ts")
+        df.repartition("source")
+        .sortWithinPartitions("source", "ts")
         .filter(F.col("n_tok") >= 16)
         .withColumn("tok_sum", F.aggregate("tokens", F.lit(0), lambda acc, x: acc + x))
     )
@@ -328,33 +328,80 @@ def test_trailing_quantiles_matches_numpy_linear(spark):
     assert checked > 100
 
 
-def test_training_set_grid_exactly_equals_generic(spark):
-    """training_set_grid (one-scan hierarchical rollup) must equal
-    training_set (generic as-of composition) EXACTLY — counts, sums,
-    means (same long/long division), max, and first_gap_s — on the
-    identical hourly request grid, including empty-window rows."""
-    from mhealth_spark.synth import synth_tokens
-    from mhealth_spark.tokens_engine import training_set, training_set_grid
+def _sorted_pdf(df):
+    return df.toPandas().sort_values(["source", "ts"]).reset_index(drop=True)
 
-    tk = synth_tokens(spark, 900, seed=23)
-    a = (
-        training_set(tk)
-        .toPandas()
-        .sort_values(["source", "ts"])
-        .reset_index(drop=True)
-    )
-    b = (
-        training_set_grid(tk)
-        .toPandas()
-        .sort_values(["source", "ts"])
-        .reset_index(drop=True)
-    )
+
+def _assert_frames_equal(a, b):
     assert list(a.columns) == list(b.columns)
     assert len(a) == len(b) > 0
     for col in a.columns:
         x, y = a[col], b[col]
         both_null = x.isna() & y.isna()
         assert (both_null | (x == y)).all(), col
+
+
+def test_training_set_grid_exactly_equals_generic(spark):
+    """The default hourly grid (``training_set(tk)``, served by the
+    one-scan rollup) must equal the generic as-of composition over the
+    same explicit grid EXACTLY — counts, sums, means (same long/long
+    division), max, and first_gap_s — including empty-window rows."""
+    from mhealth_spark.synth import synth_tokens
+    from mhealth_spark.tokens_engine import hourly_requests, training_set
+
+    tk = synth_tokens(spark, 900, seed=23)
+    _assert_frames_equal(
+        _sorted_pdf(training_set(tk, hourly_requests(tk))),
+        _sorted_pdf(training_set(tk)),
+    )
+
+
+def test_training_set_dispatch_whole_hours_take_grid(spark, monkeypatch):
+    """requests=None with whole-hour horizons goes to training_set_grid
+    (with those horizons); the as-of joins are never built."""
+    from mhealth_spark import tokens_engine
+    from mhealth_spark.synth import synth_tokens
+
+    calls = []
+    grid = tokens_engine.training_set_grid
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return grid(*args, **kwargs)
+
+    def no_join(*args, **kwargs):
+        raise AssertionError("generic as-of path taken")
+
+    monkeypatch.setattr(tokens_engine, "training_set_grid", spy)
+    monkeypatch.setattr(tokens_engine, "point_in_time_join", no_join)
+    tk = synth_tokens(spark, 300, seed=5)
+    out = tokens_engine.training_set(
+        tk, lookbacks_hours=(2.0, 12.0), horizon_hours=6.0
+    )
+    assert calls == [{"lookbacks_hours": (2, 12), "horizon_hours": 6}]
+    assert "docs_2h" in out.columns and "docs_12h" in out.columns
+
+
+def test_training_set_dispatch_fractional_hours_take_generic(spark, monkeypatch):
+    """A 0.5 h lookback is not on the hourly rollup grain: the default
+    grid must go through the generic as-of path and match it called
+    with the explicit hourly grid."""
+    from mhealth_spark import tokens_engine
+    from mhealth_spark.synth import synth_tokens
+    from mhealth_spark.tokens_engine import hourly_requests, training_set
+
+    tk = synth_tokens(spark, 600, seed=9)
+    want = _sorted_pdf(
+        training_set(tk, hourly_requests(tk), lookbacks_hours=(0.5, 24.0))
+    )
+
+    def no_grid(*args, **kwargs):
+        raise AssertionError("grid path taken for a fractional lookback")
+
+    monkeypatch.setattr(tokens_engine, "training_set_grid", no_grid)
+    got = _sorted_pdf(training_set(tk, lookbacks_hours=(0.5, 24.0)))
+    assert "docs_0.5h" in got.columns
+    _assert_frames_equal(got, want)
 
 
 def test_expanding_entity_stats_matches_pandas(spark):
