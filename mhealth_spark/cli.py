@@ -15,19 +15,18 @@ In the sandbox (no cluster), the same commands run on local[N].
 from __future__ import annotations
 
 import argparse
-import shutil
 import sys
 import tempfile
 import os
 
 
 def _build_zip(out: str | None = None) -> str:
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = (out or os.path.join(tempfile.gettempdir(), "mhealth_spark.zip"))
-    base_noext = base[:-4] if base.endswith(".zip") else base
-    path = shutil.make_archive(
-        base_noext, "zip", os.path.dirname(pkg_dir), "mhealth_spark"
-    )
+    from mhealth_spark.session import build_package_zip
+
+    path = out or os.path.join(tempfile.gettempdir(), "mhealth_spark.zip")
+    if not path.endswith(".zip"):
+        path += ".zip"
+    build_package_zip(path)
     return path
 
 

@@ -172,6 +172,8 @@ def lomb_scargle_vital_features(
         .select(*keys, "local_start", F.col("value_num").alias("v"))
         .filter(F.col("v").between(*vital_range))
         .dropna(subset=["v", "local_start"])
+        # the one exchange: serves the dedup and the grouped kernel below
+        .repartition(*keys)
         .dropDuplicates([*keys, "v", "local_start"])
     )
     prefix = f"{vital_type}_"
@@ -215,6 +217,8 @@ def circadian_vital_features(
     hourly = (
         hk.filter(F.col("type") == vital_type)
         .select(*keys, "local_start", F.col("value_num").alias("v"))
+        # the one exchange: serves the dedup, the hourly bins and the fit
+        .repartition(*keys)
         .dropDuplicates([*keys, "local_start", "v"])
         .groupBy(
             *keys,

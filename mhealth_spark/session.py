@@ -13,8 +13,10 @@ Scale posture (tuned for a multi-executor cluster, exercised on
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -186,18 +188,56 @@ def _ship_package(spark: SparkSession) -> None:
     ship the same zip via ``addPyFile`` so any entry point — driver
     harness, bench, tests — works regardless of cwd/PYTHONPATH.
     """
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     try:
         spark.sparkContext._jsc  # session alive
-        zip_base = os.path.join(tempfile.gettempdir(), "mhealth_spark_pkg")
-        zip_path = zip_base + ".zip"
-        if not os.path.exists(zip_path):
-            shutil.make_archive(
-                zip_base, "zip", os.path.dirname(pkg_dir), "mhealth_spark"
-            )
+        zip_path = os.path.join(tempfile.gettempdir(), "mhealth_spark_pkg.zip")
+        build_package_zip(zip_path)
         spark.sparkContext.addPyFile(zip_path)
     except Exception:  # pragma: no cover - best effort on exotic deploys
         pass
+
+
+def build_package_zip(zip_path: str) -> bool:
+    """Write the package's ``.py`` files to ``zip_path`` unless the zip
+    there already holds exactly them; return whether it was (re)built.
+
+    The zip comment records a SHA-256 over every file's relative path and
+    bytes, so an edited package is never served from a stale zip (two
+    checkouts sharing one temp dir, or an edit between sessions). The new
+    zip is written beside the target and moved into place atomically, so
+    a concurrent reader sees the old or the new zip, never half of one.
+    """
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(pkg_dir)
+        for f in names
+        if f.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in files:
+        with open(os.path.join(root, rel), "rb") as fh:
+            data = fh.read()
+        digest.update(rel.encode() + b"\0" + len(data).to_bytes(8, "big") + data)
+    tag = digest.hexdigest().encode()
+    try:
+        with zipfile.ZipFile(zip_path) as zf:
+            if zf.comment == tag:
+                return False
+    except (OSError, zipfile.BadZipFile):
+        pass
+    fd, tmp = tempfile.mkstemp(
+        prefix=".mhealth_spark_pkg.", dir=os.path.dirname(os.path.abspath(zip_path))
+    )
+    os.close(fd)
+    try:
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel in files:
+                zf.write(os.path.join(root, rel), rel)
+            zf.comment = tag
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    return True

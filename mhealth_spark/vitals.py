@@ -2,6 +2,10 @@
 ``simple_features.py:790-924``) as native two-level aggregation:
 context gate → hourly median bins → corrected stats + closed-form OLS.
 
+The vital rows are hash-partitioned on the group keys once, up front:
+that one exchange also serves the dedup, the ``(keys, hour)`` median and
+the final per-group aggregate, whose keys are all supersets of it.
+
 One ``group_cols`` parameter serves all three reference entry points:
 ``["user_id"]`` (batch/per-request slice), ``["user_id", "day"]``
 (``aggregateVitalsDaily``), ``["request_id", ...]`` (point-in-time E1).
@@ -107,6 +111,7 @@ def aggregate_vital(
     vital = (
         hk.filter(F.col("type") == vital_type)
         .select(*keys, "local_start", F.col("value_num").alias("v"))
+        .repartition(*keys)
         .dropDuplicates()
     )
     context_str = ""
@@ -125,7 +130,8 @@ def aggregate_vital(
     if vital_range is not None:
         vital = vital.filter(F.col("v").between(*vital_range))
 
-    # hourly (epoch-aligned) median bins — two-level agg, one extra shuffle
+    # hourly (epoch-aligned) median bins — two-level agg on the keys'
+    # partitioning, no shuffle of its own
     bucket_s = int(resample_hours * 3600)
     hourly = vital.groupBy(
         *keys,

@@ -12,6 +12,7 @@ from mhealth_spark.activity import aggregate_active_duration
 from mhealth_spark.audio import aggregate_audio_exposure
 from mhealth_spark.schema import HK_EVENT_SCHEMA
 from mhealth_spark.sleep import aggregate_sleep_categories, daily_sleep_features
+from mhealth_spark.synth import synth_healthkit
 from mhealth_spark.vitals import aggregate_vital
 from mhealth_spark.watch import watch_on_hours_daily, watch_on_stats
 from tests import fixtures
@@ -84,6 +85,49 @@ def test_hr_context(spark, context, mean, count):
     assert len(out) == 1
     assert out[f"HeartRate_{ctx}mean"].iloc[0] == mean
     assert out[f"HeartRate_{ctx}count"].iloc[0] == count
+
+
+def test_aggregate_vital_daily_dedups_before_hourly_medians(spark):
+    # Every 4th HeartRate point gets an exact duplicate and a second
+    # point 10 bpm higher in the same hour: with the duplicate dropped the
+    # hour's median is the midpoint, without it the original value.
+    ev = synth_healthkit(n_users=3, days=4, seed=9)
+    hr = ev[ev["type"] == "HeartRate"]
+    picked = hr.iloc[::4]
+    extra = picked.assign(
+        local_start=picked["local_start"].dt.floor("h"),
+        local_end=picked["local_start"].dt.floor("h"),
+        value_num=picked["value_num"] + 10.0,
+    )
+    extra = extra.assign(value=extra["value_num"].astype(str))
+    ev = pd.concat([ev, picked, extra], ignore_index=True)
+
+    v = ev[ev["type"] == "HeartRate"].assign(_day=lambda d: d["local_start"].dt.floor("D"))
+    v = v.drop_duplicates(["user_id", "_day", "local_start", "value_num"])
+    v = v.assign(_hb=(v["local_start"] - pd.Timestamp(0)) // pd.Timedelta(hours=1))
+    bins = v.groupby(["user_id", "_day", "_hb"])["value_num"].median().reset_index()
+    rows = []
+    for (user, day), g in bins.groupby(["user_id", "_day"]):
+        x = (g["_hb"] - g["_hb"].min()).to_numpy(float)
+        y = g["value_num"].to_numpy(float)
+        slope, intercept = np.polyfit(x, y, 1) if len(g) >= 3 else (np.nan, np.nan)
+        rows.append(dict(user_id=user, _day=day, mean=y.mean(), median=np.median(y),
+                         std=g["value_num"].std(), slope=slope, intercept=intercept))
+    ref = pd.DataFrame(rows)
+
+    hk = _to_spark(spark, ev).withColumn("_day", F.date_trunc("DAY", "local_start"))
+    got = aggregate_vital(
+        hk, "HeartRate", group_cols=["user_id", "_day"],
+        standard_aggregations=["mean", "median", "std"], column_suffix="_day",
+    ).toPandas()
+    got = got.rename(columns={
+        f"HeartRate_{c}_day": c for c in ["mean", "median", "std", "slope", "intercept"]
+    })
+    m = ref.merge(got, on=["user_id", "_day"], how="outer", suffixes=("", "_got"),
+                  indicator=True)
+    assert (m["_merge"] == "both").all() and len(m) == 12
+    for c in ["mean", "median", "std", "slope", "intercept"]:
+        np.testing.assert_allclose(m[f"{c}_got"], m[c], rtol=1e-9, atol=1e-9, err_msg=c)
 
 
 # --- reference test_audio_exposure (+ daily variant) ----------------------

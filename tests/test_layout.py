@@ -215,3 +215,32 @@ def test_multilabel_grid_adds_no_exchange(spark):
         training_set_grid(tk, extra_label_horizons=(1, 6))
     ).count("Exchange")
     assert multi == base, (base, multi)
+
+
+@pytest.mark.parametrize("op", ["aggregate_vital", "circadian", "lomb_scargle"])
+def test_vital_aggregate_single_hash_exchange(spark, op):
+    # the up-front repartition on the group keys serves the dedup, the
+    # (keys, hour) median, the per-group aggregate and the Arrow kernel:
+    # one hash exchange per plan
+    import pyspark.sql.functions as F
+
+    from mhealth_spark.features import (
+        circadian_vital_features,
+        lomb_scargle_vital_features,
+    )
+    from mhealth_spark.schema import VITAL_RANGES
+    from mhealth_spark.synth import hk_to_spark, synth_healthkit
+    from mhealth_spark.vitals import aggregate_vital
+
+    hk = hk_to_spark(spark, synth_healthkit(n_users=2, days=2, seed=3))
+    hk_day = hk.withColumn("_day", F.date_trunc("DAY", "local_start"))
+    keys = ["user_id", "_day"]
+    out = {
+        "aggregate_vital": lambda: aggregate_vital(hk_day, "HeartRate", group_cols=keys),
+        "circadian": lambda: circadian_vital_features(hk_day, "HeartRate", group_cols=keys),
+        "lomb_scargle": lambda: lomb_scargle_vital_features(
+            hk, "HeartRate", VITAL_RANGES["HeartRate"]
+        ),
+    }[op]()
+    plan = _plan(out)
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan

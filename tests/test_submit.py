@@ -53,3 +53,42 @@ def test_spark_submit_cli_job(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 200
     assert "split" in got.columns
+
+
+def test_package_zip_tracks_package_content(tmp_path, monkeypatch):
+    # build the zip from a copy of the package, so the test can edit it
+    import shutil
+    import zipfile
+
+    from mhealth_spark import session
+
+    pkg = tmp_path / "src" / "mhealth_spark"
+    shutil.copytree(
+        os.path.dirname(session.__file__), pkg,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    monkeypatch.setattr(session, "__file__", str(pkg / "session.py"))
+    zip_path = str(tmp_path / "pkg.zip")
+
+    def shipped(name):
+        with zipfile.ZipFile(zip_path) as zf:
+            return zf.read(f"mhealth_spark/{name}")
+
+    # a zip that records no content hash (an older build) is replaced
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        zf.writestr("mhealth_spark/kernels.py", b"stale")
+    assert session.build_package_zip(zip_path)
+    assert shipped("kernels.py") == (pkg / "kernels.py").read_bytes()
+    assert shipped("pipelines/__init__.py") == (pkg / "pipelines" / "__init__.py").read_bytes()
+
+    # unchanged package: the zip is left alone
+    before = os.stat(zip_path)
+    assert not session.build_package_zip(zip_path)
+    after = os.stat(zip_path)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+
+    # edited package: the zip is rebuilt with the new bytes
+    (pkg / "kernels.py").write_bytes((pkg / "kernels.py").read_bytes() + b"# edited\n")
+    assert session.build_package_zip(zip_path)
+    assert shipped("kernels.py").endswith(b"# edited\n")
+    assert not any(p.name.startswith(".mhealth_spark_pkg.") for p in tmp_path.iterdir())
